@@ -24,6 +24,13 @@ to FPR≈1 at 10^10 URLs):
 Membership is a *prefilter*: "definitely new" rows skip the exact anti-join
 entirely; only maybe-seen rows pay for it. Correctness is never
 bloom-dependent — a saturated filter only costs extra anti-join work.
+
+The prefilter only pays in front of an exact set too large to probe
+directly, so the engine keeps NO filter while the seen set is below its
+log-prune gate (engine.PRUNE_MIN_SEEN, env ``CRAWL_PRUNE_MIN_SEEN``): a round
+there is one left-anti join against the whole seen_hashes log. The round in
+which the seen set reaches the gate builds the filter from the log
+(build_filters); from then on it is carried and grown as above.
 """
 
 from __future__ import annotations
@@ -220,32 +227,6 @@ def build_filters(
     return with_pid.groupBy("partition_id").applyInPandas(_build, FILTER_SCHEMA)
 
 
-def build_filter_rows_local(url_hashes, round_id: int, kind: str | None = None) -> list[dict]:
-    """Driver-side twin of build_filters for an ALREADY-DRIVER-RESIDENT hash
-    list (the submit_seeds API edge — seeds arrive as a Python list, so
-    spinning up a shuffle + cogrouped applyInPandas just to build 128 tiny
-    numpy arrays is pure overhead; r8 profiling put it at 2-3 s of the
-    seed commit). Identical rows to build_filters by construction: same
-    partition_id math, same size_for sizing, same _set_bits bit positions.
-    The distributed builder remains the path for DataFrame-scale inputs
-    (submit_frontier, rebuilds)."""
-    kind = kind or FILTER_KIND
-    by_pid: dict[int, list] = {}
-    for h in url_hashes:
-        by_pid.setdefault(int(h[:4], 16) % N_PARTITIONS, []).append(h)
-    rows: list[dict] = []
-    for pid in sorted(by_pid):
-        hs = pd.Series(by_pid[pid])
-        if kind == "cuckoo":
-            rows.extend(_cuckoo_build_rows(pid, hs, round_id, MIN_BITS))
-            continue
-        m = size_for(len(hs), MIN_BITS)
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        _set_bits(bits, hs, m)
-        rows.append(_gen_row(pid, bits, m, len(hs), round_id))
-    return rows
-
-
 def add_to_filters(filters: DataFrame, hashes_df: DataFrame, round_id: int) -> DataFrame:
     """ONE cogrouped pass: OR the new url_hashes into the existing filters.
 
@@ -424,10 +405,13 @@ def maybe_seen(candidates: DataFrame, filters: DataFrame) -> DataFrame:
     )
 
 
-def filter_stats(filters: DataFrame) -> dict:
+def filter_stats(filters: DataFrame | None) -> dict:
     """Tiny driver-side summary (bits never collected): total items/bits,
     generation count, and the combined false-positive estimate
-    1 - Π(1 - fpr_gen), averaged over partitions."""
+    1 - Π(1 - fpr_gen), averaged over partitions. *filters* is None below
+    the engine's gate (no filter kept): an empty summary."""
+    if filters is None:
+        return {"n_items": 0, "m_bits": 0, "generations": 0, "est_fpr": 0.0}
     rows = filters.select("partition_id", "filter_kind", "m_bits", "n_items").collect()
     per_part: dict[int, float] = {}
     # cuckoo per-generation FPR ≈ 2 buckets × 4 slots / 2^16 fingerprints

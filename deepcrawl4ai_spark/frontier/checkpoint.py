@@ -1,11 +1,11 @@
 """Iceberg-style checkpoint store: Parquet data + atomic JSON snapshot
 manifests (SURVEY.md §7 plan B).
 
-Every round commits frontier + seen_filter + results + rounds in ONE atomic
-step: data files are written first, then the snapshot manifest, then the
-`_current.json` pointer is atomically renamed over (reference analog: the
-LRANGE+LTRIM pipeline pop, crawl.py:171-184 — but with all-tables atomicity
-the reference lacks). A crash between data write and pointer flip leaves the
+Every round commits frontier (+ seen_filter, when the engine keeps one) +
+results + rounds in ONE atomic step: data files are written first, then the
+snapshot manifest, then the `_current.json` pointer is atomically renamed
+over (reference analog: the LRANGE+LTRIM pipeline pop, crawl.py:171-184 —
+but with all-tables atomicity the reference lacks). A crash between data write and pointer flip leaves the
 old snapshot current; the re-run overwrites the same round directories, so
 recovery is idempotent and a killed job resumes WITHOUT re-fetching earlier
 rounds (north_rule T7).
@@ -21,6 +21,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # active: the live queue (rewritten per round, O(queue) not O(all-seen));
 # done + seen_hashes + results: append-only (terminal rows / url_hash log /
@@ -134,6 +135,9 @@ class CheckpointStore:
             "round": round_id,
             "tables": tables,
             "tables_meta": files_meta,
+            # every table in the snapshot is written by this commit: its
+            # schema pins the read-back (no inference job per path read)
+            "schemas": {name: df.schema.json() for name, df, _path in jobs},
             "metrics": metrics,
         }
         snap_path = os.path.join(self.root, "_snapshots", f"r{round_id:05d}.json")
@@ -213,16 +217,23 @@ class CheckpointStore:
         if table not in snap["tables"]:
             return None
         paths = snap["tables"][table]
+        # the commit-time schema: an inferring read runs a one-task Spark
+        # job per read path, and seen_hashes gains a path every round.
+        # Manifests that predate the recorded schema fall back to inference.
+        schema = (snap.get("schemas") or {}).get(table)
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
         if table in PARTITIONED_TABLES and len(paths) > 1:
             # each round dir is its own hive-partitioned root — read them
             # separately and union (a single multi-path read trips partition
             # discovery across sibling roots); bucket filters still prune
             # files inside every branch
-            out = spark.read.parquet(paths[0])
+            out = reader.parquet(paths[0])
             for p in paths[1:]:
-                out = out.unionByName(spark.read.parquet(p), allowMissingColumns=True)
+                out = out.unionByName(reader.parquet(p), allowMissingColumns=True)
             return out
-        return spark.read.parquet(*paths)
+        return reader.parquet(*paths)
 
     def expire_snapshots(self, keep_last: int = 3) -> list[int]:
         """TTL cleanup (reference should_cleanup_task, utils.py:156-159;
@@ -292,13 +303,15 @@ class CheckpointStore:
 
     def round_metrics(self) -> list[dict]:
         """All committed round metrics, in round order (lineage view)."""
+        cur = self.current_snapshot()
+        if cur is None:
+            return []
         out = []
         snap_dir = os.path.join(self.root, "_snapshots")
         for name in sorted(os.listdir(snap_dir)):
             if name.endswith(".json"):
                 with open(os.path.join(snap_dir, name)) as f:
                     s = json.load(f)
-                cur = self.current_snapshot()
-                if cur is not None and s["round"] <= cur["round"]:
+                if s["round"] <= cur["round"]:
                     out.append(s["metrics"])
         return out

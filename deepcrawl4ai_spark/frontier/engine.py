@@ -17,13 +17,17 @@ Per round (all DataFrame ops, one driver-side loop):
               round-robin repartition so the expensive stage uses every core
               (deterministic synthetic web here; async client pool on a real
               cluster).
-  dedup       J3: bloom prefilter (partitioned, size-adaptive generations,
-              applyInPandas) → exact left-anti rescue ONLY for maybe-seen
-              rows, against ONLY the seen_hashes storage buckets they hash
-              into (partition-pruned log scan).
-  commit      X3/T7: frontier + seen_filter + results in one atomic snapshot
-              (round metrics/lineage live in the manifest itself); kill +
-              restart resumes without re-fetching.
+  dedup       J3: below the seen-set gate (PRUNE_MIN_SEEN) ONE exact
+              left-anti join of the outlink batch against the whole
+              append-only seen_hashes log — no seen filter is kept. From the
+              round the seen set reaches the gate on: bloom prefilter
+              (partitioned, size-adaptive generations, applyInPandas; built
+              from the log in that round) → exact left-anti rescue ONLY for
+              maybe-seen rows, against ONLY the seen_hashes storage buckets
+              they hash into (partition-pruned log scan).
+  commit      X3/T7: frontier (+ seen_filter at/above the gate) + results in
+              one atomic snapshot (round metrics/lineage live in the manifest
+              itself); kill + restart resumes without re-fetching.
 
 Canonical total order (SURVEY.md §4.5): (-score, depth, url_hash) — shared
 with the pure-Python simulator, which is the golden oracle for crawl-order /
@@ -42,6 +46,7 @@ Efficiency notes (the 100 TB view):
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
@@ -65,6 +70,14 @@ FRONTIER_COLS = (
 
 
 from deepcrawl4ai_spark.frontier import DEFAULT_HOST_MAX_TOKENS
+
+# The seen-set gate, shared by the seen filter and the bucket prune: below
+# it the append-only seen_hashes log is small enough to scan whole, so a
+# round dedups with one exact anti-join and keeps no filter (the bloom
+# probe, the filter merge and bucket discovery are jobs that pay only in
+# front of a log too large to scan). At it, round_iter builds the filter
+# from the log. Purely physical: results never depend on the filter.
+PRUNE_MIN_SEEN = int(os.environ.get("CRAWL_PRUNE_MIN_SEEN", "1000000"))
 
 
 @dataclass
@@ -237,45 +250,43 @@ class CrawlEngine:
         fetched over the wire — consumed WITHOUT ever materializing rows on
         the driver: it is localCheckpointed once (the robots CACHE — the wire
         fetch runs exactly once, not per broadcast re-plan) and the two
-        driver-side bounds come from a single 2-value aggregate."""
+        driver-side bounds come from a single 2-value aggregate. Driver rows
+        take the same path (an uncached Python-rows frame re-runs a Python
+        job for every broadcast of every round)."""
         self.spark = spark
         self.cfg = cfg or EngineConfig()
         self.store = CheckpointStore(store_root)
         scale = self.cfg.budget_scale
-        if robots_df is not None:
-            dim = robots_df.select(
-                "host",
-                (F.col("max_tokens") * scale).cast("int").alias("max_tokens"),
-                (F.col("rps_budget").cast("int") * scale).cast("int").alias("refill"),
-                "disallow_rules",
+        if robots_df is None:
+            robots = robots_rows if robots_rows is not None else WG.robots_rows()
+            robots_df = spark.createDataFrame(
+                [
+                    (r["host"], r["max_tokens"], float(r["rps_budget"]), r["disallow_rules"])
+                    for r in robots
+                ],
+                "host string, max_tokens int, rps_budget double,"
+                " disallow_rules array<string>",
             )
-            # materialize once, executor-side: this IS the robots cache
-            self.robots_df = dim.localCheckpoint()
-            agg = self.robots_df.agg(
-                F.max("max_tokens"), F.sum("max_tokens")
-            ).head()
-            self._max_budget = int(agg[0]) if agg[0] is not None else 2
-            self._sum_host_budgets = int(agg[1]) if agg[1] is not None else 0
-            return
-        robots = robots_rows if robots_rows is not None else WG.robots_rows()
-        scaled = [r["max_tokens"] * scale for r in robots]
-        self._max_budget = max(scaled, default=2)
-        # upper bound on a round's host-capped selection IF every robots
-        # host has queued candidates — gates the optimistic fetch (below)
-        self._sum_host_budgets = sum(scaled)
-        self.robots_df = spark.createDataFrame(
-            [
-                (r["host"], t, int(r["rps_budget"]) * scale, r["disallow_rules"])
-                for r, t in zip(robots, scaled)
-            ],
-            "host string, max_tokens int, refill int, disallow_rules array<string>",
+        dim = robots_df.select(
+            "host",
+            (F.col("max_tokens") * scale).cast("int").alias("max_tokens"),
+            (F.col("rps_budget").cast("int") * scale).cast("int").alias("refill"),
+            "disallow_rules",
         )
+        # materialize once, executor-side: this IS the robots cache
+        self.robots_df = dim.localCheckpoint()
+        agg = self.robots_df.agg(F.max("max_tokens"), F.sum("max_tokens")).head()
+        self._max_budget = int(agg[0]) if agg[0] is not None else 2
+        # upper bound on a round's host-capped selection IF every robots
+        # host has queued candidates — gates the optimistic fetch (run_round)
+        self._sum_host_budgets = int(agg[1]) if agg[1] is not None else 0
 
     # -- seed ingest (S1) -------------------------------------------------------
 
     def submit_seeds(self, seed_urls: list[str]) -> None:
-        """Initialize the frontier + seen filter from a seed list (idempotent:
-        no-op if a checkpoint already exists — resume wins)."""
+        """Initialize the frontier + seen log from a seed list (idempotent:
+        no-op if a checkpoint already exists — resume wins). No seen filter:
+        round_iter builds it from the log in the first round at the gate."""
         if self.store.last_round() is not None:
             return
         rows = WG.seed_frontier_rows(seed_urls)
@@ -299,20 +310,11 @@ class CrawlEngine:
             # partition per core (32 near-empty tasks per consuming job at
             # bench scale; guide §6 small-files). coalesce is narrow: no job.
         ).coalesce(max(2, min(8, len(rows) // 1000 + 1)))
-        # seeds are a driver-resident list — build the 128 filter rows with
-        # plain numpy (bloom.build_filter_rows_local, value-identical to the
-        # distributed builder) instead of a shuffle + cogrouped
-        # applyInPandas: r8 profiling measured the distributed build at
-        # 2-3 s of the seed commit at bench scale
-        filters = self.spark.createDataFrame(
-            bloom.build_filter_rows_local([r["url_hash"] for r in rows], -1),
-            bloom.FILTER_SCHEMA,
-        )
         results = self.spark.createDataFrame([], self._results_schema())
         empty_done = self.spark.createDataFrame([], self._frontier_schema())
         self.store.commit_round(
             -1,
-            overwrite={"active": frontier, "seen_filter": filters},
+            overwrite={"active": frontier},
             append={
                 "results": results,
                 "done": empty_done,
@@ -331,13 +333,12 @@ class CrawlEngine:
         if self.store.last_round() is not None:
             return
         frontier = frontier.select(*FRONTIER_COLS).persist()
-        n_seeds = frontier.count()  # once, at seed time — sizes the filters
-        filters = bloom.build_filters(frontier.select("url_hash"), -1)
+        n_seeds = frontier.count()  # once, at seed time — the seen-set size
         results = self.spark.createDataFrame([], self._results_schema())
         empty_done = self.spark.createDataFrame([], self._frontier_schema())
         self.store.commit_round(
             -1,
-            overwrite={"active": frontier, "seen_filter": filters},
+            overwrite={"active": frontier},
             append={
                 "results": results,
                 "done": empty_done,
@@ -439,9 +440,12 @@ class CrawlEngine:
                 )
                 n_requeued = requeued.count()
         active = prior_active.unionByName(fresh).unionByName(requeued)
+        overwrite = {"active": active}
         filters = self.store.read(self.spark, "seen_filter")
-        new_filters = bloom.add_to_filters(filters, fresh.select("url_hash"), r)
-        overwrite = {"active": active, "seen_filter": new_filters}
+        if filters is not None:  # none below the gate (round_iter builds it)
+            overwrite["seen_filter"] = bloom.add_to_filters(
+                filters, fresh.select("url_hash"), r
+            )
         host_state = self.store.read(self.spark, "host_state")
         if host_state is not None:
             overwrite["host_state"] = host_state
@@ -500,21 +504,23 @@ class CrawlEngine:
         self,
         r: int,
         frontier: DataFrame,
-        filters: DataFrame,
+        filters: DataFrame | None,
         budget: int | None = None,
         extra_metrics: dict | None = None,
         active_est: int | None = None,
-        seen_est: int | None = None,
     ) -> tuple[dict, DataFrame | None, DataFrame | None]:
+        """Execute and commit round *r*. *filters* is the carried seen
+        filter, None below the PRUNE_MIN_SEEN gate (round_iter decides):
+        then the round dedups with one exact anti-join against the whole
+        seen_hashes log and commits no filter."""
         cfg = self.cfg
         round_budget = budget if budget is not None else cfg.global_budget
         self.spark.sparkContext.setJobGroup(
             f"crawl_round_{r}", f"frontier round {r}", interruptOnCancel=True
         )
-        import os as _os
         import time as _time
 
-        _profile = _os.environ.get("CRAWL_PROFILE") == "1"
+        _profile = os.environ.get("CRAWL_PROFILE") == "1"
         _phases: dict[str, float] = {}
         _t = _time.time()
 
@@ -727,7 +733,8 @@ class CrawlEngine:
         succ = fetched.filter(F.col("fetch_status") == "success")
 
         # outlink pipeline: explode → robots/social filter → batch dedup →
-        # bloom prefilter → exact anti-join rescue
+        # exact anti-join against the seen log (bloom-prefiltered and
+        # bucket-pruned at/above the gate)
         links = succ.filter(F.col("depth") < cfg.max_depth).select(
             (F.col("depth") + 1).alias("depth"), F.explode("links").alias("url_norm")
         )
@@ -753,44 +760,37 @@ class CrawlEngine:
                 F.first("host").alias("host"),
             )
         )
-        # persist: both branches (definitely-new + rescue) read this once,
-        # not recompute the whole explode→groupBy→cogroup chain each
-        flagged = bloom.maybe_seen(batch, filters).persist()
-        # exact-rescue anti-join, PARTITION-PRUNED: only the storage buckets
-        # actually present among maybe-seen candidates are read from the
-        # append-only seen_hashes log (tiny distinct-collect over the
-        # persisted flagged set; at 10^10 hashes this is the difference
-        # between scanning the whole log and a few buckets per round)
-        maybe = flagged.filter(F.col("maybe_seen"))
-        # bucket discovery is itself a job (distinct + tiny collect): it only
-        # pays for itself once the append-only log is big enough that
-        # skipping buckets beats one extra scheduler round-trip. Below the
-        # threshold, scan the whole (small) log — identical results, the
-        # prune is purely physical. The 10^10-hash regime always prunes.
-        prune_min = int(
-            _os.environ.get("CRAWL_PRUNE_MIN_SEEN", "1000000")
-        )
-        if seen_est is not None and seen_est < prune_min:
-            buckets = list(range(bloom.SEEN_BUCKETS))
+        seen_hashes = self.store.read(self.spark, "seen_hashes")
+        flagged = None
+        if filters is None:
+            # below the gate: the log is small — one exact anti-join
+            new_src = batch.join(seen_hashes.select("url_hash"), "url_hash", "left_anti")
         else:
+            # persist: both branches (definitely-new + rescue) read this
+            # once, not recompute the explode→groupBy→cogroup chain each
+            flagged = bloom.maybe_seen(batch, filters).persist()
+            # exact-rescue anti-join, PARTITION-PRUNED: only the storage
+            # buckets present among maybe-seen candidates are read from the
+            # log (tiny distinct-collect over the persisted flagged set; at
+            # 10^10 hashes the difference between scanning the whole log
+            # and a few buckets per round)
+            maybe = flagged.filter(F.col("maybe_seen"))
             buckets = [
-                r[0]
-                for r in maybe.select(
+                row[0]
+                for row in maybe.select(
                     (F.col("partition_id") % bloom.SEEN_BUCKETS).alias("b")
                 )
                 .distinct()
                 .collect()
             ]
-        if buckets:
-            seen_hashes = self.store.read(self.spark, "seen_hashes")
-            if "bucket" in seen_hashes.columns and len(buckets) < bloom.SEEN_BUCKETS:
-                seen_hashes = seen_hashes.filter(F.col("bucket").isin(buckets))
-            rescued = maybe.join(
-                seen_hashes.select("url_hash"), "url_hash", "left_anti"
-            )
-            new_src = flagged.filter(~F.col("maybe_seen")).unionByName(rescued)
-        else:  # bloom says every candidate is definitely new — no log scan
             new_src = flagged.filter(~F.col("maybe_seen"))
+            if buckets:  # else the bloom says every candidate is new
+                if "bucket" in seen_hashes.columns and len(buckets) < bloom.SEEN_BUCKETS:
+                    seen_hashes = seen_hashes.filter(F.col("bucket").isin(buckets))
+                rescued = maybe.join(
+                    seen_hashes.select("url_hash"), "url_hash", "left_anti"
+                )
+                new_src = new_src.unionByName(rescued)
         new_rows = (
             new_src
             .select(
@@ -858,10 +858,8 @@ class CrawlEngine:
         if active_est is None:
             n_write = n_par
         else:
-            import os as _os2
-
             rows_per_file = int(
-                _os2.environ.get("CRAWL_WRITE_ROWS_PER_FILE", "250000")
+                os.environ.get("CRAWL_WRITE_ROWS_PER_FILE", "250000")
             )
             n_write = min(n_par, max(4, active_est // rows_per_file + 1))
         new_active = (
@@ -869,9 +867,6 @@ class CrawlEngine:
             .unionByName(new_rows.select(*FRONTIER_COLS))
             .repartition(n_write)
         )
-
-        # seen filter merge: single cogrouped OR pass (associative/idempotent)
-        new_filters = bloom.add_to_filters(filters, new_rows.select("url_hash"), r)
 
         results = succ.select(
             F.col("url_hash").alias("doc_id"),
@@ -911,7 +906,12 @@ class CrawlEngine:
             metrics.update(extra_metrics)
 
         metrics["state"] = "committed"
-        overwrite = {"active": new_active, "seen_filter": new_filters}
+        overwrite = {"active": new_active}
+        if filters is not None:
+            # seen filter merge: single cogrouped OR pass (associative/idempotent)
+            overwrite["seen_filter"] = bloom.add_to_filters(
+                filters, new_rows.select("url_hash"), r
+            )
         if cfg.token_bucket and eff is not None:
             consumed = fetched.groupBy("host").agg(F.count("*").alias("consumed"))
             overwrite["host_state"] = eff.join(consumed, "host", "left").select(
@@ -949,7 +949,8 @@ class CrawlEngine:
                 flush=True,
             )
         fetched.unpersist()
-        flagged.unpersist()
+        if flagged is not None:
+            flagged.unpersist()
         new_rows.unpersist()
         updated.unpersist()
         if eff is not None:
@@ -1021,8 +1022,9 @@ class CrawlEngine:
         # resume picks up the controller state from the last committed round
         committed = self.store.round_metrics()
         last_metrics = committed[-1] if committed else None
-        # bloom sizing state: total seen-set size + size at the last
-        # (re)build — pure driver arithmetic over committed metrics, no jobs
+        # seen-filter state: total seen-set size (against PRUNE_MIN_SEEN) +
+        # size at the last (re)build — pure driver arithmetic over committed
+        # metrics, no jobs
         seen_total = 0
         built_n = 0
         # live-queue size estimate (file-sizing only — factor-2 accuracy is
@@ -1032,7 +1034,6 @@ class CrawlEngine:
         for m0 in committed:
             if m0.get("round", -1) < 0:
                 seen_total = max(m0.get("seeded") or 0, 0)
-                built_n = seen_total
                 active_est = seen_total
             else:
                 seen_total += m0.get("new_frontier", 0) or 0
@@ -1051,18 +1052,23 @@ class CrawlEngine:
                 break
             t0 = _time.time()
             rebuilt = False
-            if seen_total > max(4 * built_n, rebuild_floor):
-                # the seen-set outgrew the last build: collapse generations
-                # into one right-sized filter per partition, rebuilt from the
-                # append-only seen_hashes log (happens O(log N) times over a
-                # crawl's lifetime; persisted with this round's commit)
+            if seen_total < PRUNE_MIN_SEEN:
+                filters = None  # below the gate: exact anti-join only
+            elif filters is None or seen_total > max(4 * built_n, rebuild_floor):
+                # the round that reaches the gate (round 0 when the seeds
+                # alone do; also on a resume past it without a committed
+                # filter), or the seen-set outgrew the last build: build one right-sized filter per partition
+                # from the append-only seen_hashes log (O(log N) times over
+                # a crawl's lifetime; persisted with this round's commit)
                 filters = bloom.build_filters(
                     self.store.read(self.spark, "seen_hashes").select("url_hash"), r
                 )
                 built_n = seen_total
                 rebuilt = True  # lazy — the cost lands in this round's dedup
             budget = self._next_budget(last_metrics)
-            extra = {"bloom_built_n": built_n, **self._last_gauges}
+            extra = dict(self._last_gauges)
+            if filters is not None:
+                extra["bloom_built_n"] = built_n
             if rebuilt:
                 extra["bloom_rebuilt"] = True
             m, nf, nflt = self.run_round(
@@ -1072,7 +1078,6 @@ class CrawlEngine:
                 budget,
                 extra_metrics=extra,
                 active_est=max(active_est, 0),
-                seen_est=seen_total,
             )
             if m.get("empty"):
                 nxt = m.get("next_due")

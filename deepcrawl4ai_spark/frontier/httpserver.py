@@ -31,10 +31,22 @@ class _Handler(BaseHTTPRequestHandler):
             # as real robots.txt text, parsed back by functions/robots.py
             from deepcrawl4ai_spark.functions.robots import render_robots_txt
 
-            if self.server.robots_delay_s:
-                import time
+            # in-flight gauge around the delay (the reply comes after the
+            # decrement, so a sequential client can never read 2): the
+            # wire-side witness for the robots fill's fan-out width
+            with self.server.lock:
+                self.server.robots_active += 1
+                self.server.robots_max_active = max(
+                    self.server.robots_max_active, self.server.robots_active
+                )
+            try:
+                if self.server.robots_delay_s:
+                    import time
 
-                time.sleep(self.server.robots_delay_s)
+                    time.sleep(self.server.robots_delay_s)
+            finally:
+                with self.server.lock:
+                    self.server.robots_active -= 1
             h = urllib.parse.parse_qs(parsed.query).get("h", [""])[0]
             row = next((r for r in WG.robots_rows() if r["host"] == h), None)
             if row is None:
@@ -134,6 +146,8 @@ class SyntheticWebServer:
         self._srv.n_extracts = 0
         self._srv.extract_active = 0
         self._srv.extract_max_active = 0
+        self._srv.robots_active = 0
+        self._srv.robots_max_active = 0
         self._srv.host_active = {}
         self._srv.host_max_active = {}
         self._srv.delay_s = delay_s
@@ -163,6 +177,12 @@ class SyntheticWebServer:
     def extract_max_active(self) -> int:
         with self._srv.lock:
             return self._srv.extract_max_active
+
+    @property
+    def robots_max_active(self) -> int:
+        """Highest concurrent /robots.txt requests ever observed."""
+        with self._srv.lock:
+            return self._srv.robots_max_active
 
     def host_max_inflight(self, host: str) -> int:
         """Highest concurrent /page requests ever observed for *host*."""

@@ -97,6 +97,10 @@ def test_generation_spill_and_membership(spark, monkeypatch):
     # filter_stats reflects both generations
     stats = B.filter_stats(fb)
     assert stats["generations"] == 2 and stats["n_items"] == 240
+    # no filter kept (below the engine's gate): an empty summary
+    assert B.filter_stats(None) == {
+        "n_items": 0, "m_bits": 0, "generations": 0, "est_fpr": 0.0
+    }
 
 
 def test_empty_filter_partition(spark):

@@ -139,9 +139,11 @@ def test_golden_crawl_equality_bloom_vs_cuckoo(spark, tmp_path_factory, monkeypa
     """The filter kind is a PHYSICAL choice: a cuckoo-backed crawl produces
     byte-identical crawl order, metrics, and seen set to the bloom-backed
     one (correctness never depends on the prefilter)."""
-    from deepcrawl4ai_spark.frontier import webgraph as WG
+    from deepcrawl4ai_spark.frontier import engine as E, webgraph as WG
     from deepcrawl4ai_spark.frontier.engine import CrawlEngine, EngineConfig
 
+    # keep a seen filter from the seeds on (default gate: none below 10^6)
+    monkeypatch.setattr(E, "PRUNE_MIN_SEEN", 0)
     cfg = dict(global_budget=120, max_rounds=2, max_depth=3, record_order=True)
     runs = {}
     for kind in ("bloom", "cuckoo"):

@@ -7,7 +7,7 @@ import os
 
 import pytest
 
-from deepcrawl4ai_spark.frontier import webgraph as WG
+from deepcrawl4ai_spark.frontier import engine as E, webgraph as WG
 from deepcrawl4ai_spark.frontier.engine import CrawlEngine, EngineConfig
 from deepcrawl4ai_spark.frontier.simulator import SimConfig, simulate
 
@@ -88,9 +88,12 @@ def test_resubmit_cache_modes(spark, tmp_path_factory):
             eng.cancel()
 
     eng.run(WG.gen_seeds(16), on_round=stop_after_two)
+    # the top-ranked fetched URL: a requeued row then fits its host's
+    # budget in the next round (an arbitrary head() depends on file order)
     fetched_url = (
         eng.store.read(spark, "done")
         .filter(F.col("state") == "fetched")
+        .orderBy(F.col("score").desc(), "url_hash")
         .select("url_norm")
         .head()["url_norm"]
     )
@@ -261,6 +264,8 @@ def test_bloom_rebuild_keeps_golden_parity(spark, tmp_path_factory, monkeypatch)
     from deepcrawl4ai_spark.frontier.simulator import SimConfig, simulate
 
     monkeypatch.setattr(bloom, "MIN_BITS", 16)  # rebuild floor: ~204 items
+    # keep a seen filter from the seeds on (default gate: none below 10^6)
+    monkeypatch.setattr(E, "PRUNE_MIN_SEEN", 0)
     cfg = dict(global_budget=150, max_depth=3, max_attempts=2, record_order=True)
     sim = simulate(WG.gen_seeds(48), SimConfig(max_rounds=3, **cfg))
     root = str(tmp_path_factory.mktemp("rebuild"))
@@ -271,6 +276,51 @@ def test_bloom_rebuild_keeps_golden_parity(spark, tmp_path_factory, monkeypatch)
     for i, m in enumerate(metrics):
         assert m["crawl_order"] == sim.crawl_order[i], f"round {i}"
         assert m["new_frontier"] == sim.round_metrics[i]["new_frontier"]
+
+
+def test_seen_filter_gate_crossing(spark, tmp_path_factory, monkeypatch):
+    """Below PRUNE_MIN_SEEN a round dedups with one exact anti-join and
+    commits no seen filter; the round that reaches the gate builds it from
+    the seen_hashes log. 12 seeds at budget 12: the seen set holds 109
+    hashes before round 3 and 120 before round 4, so a gate of 115 crosses
+    at round 4. The engine equals the simulator in every round, also when
+    killed before the crossing and resumed across it, and a round's Spark
+    job count does not grow with the crawl's history."""
+    monkeypatch.setattr(E, "PRUNE_MIN_SEEN", 115)
+    cfg = dict(global_budget=12, max_depth=3, max_attempts=2, record_order=True)
+    seeds = WG.gen_seeds(12)
+    sim = simulate(seeds, SimConfig(max_rounds=6, **cfg))
+    crossing = 4
+
+    def check(metrics, rounds):
+        assert [m["round"] for m in metrics] == list(rounds)
+        for m in metrics:
+            i = m["round"]
+            assert m["crawl_order"] == sim.crawl_order[i], f"round {i}"
+            for k in ("urls_popped", "dedup_dropped", "new_frontier"):
+                assert m[k] == sim.round_metrics[i][k], f"round {i} {k}"
+
+    # job groups are named by round number and shared with earlier crawls
+    # on the same SparkContext: count only the jobs this run adds
+    tracker = spark.sparkContext.statusTracker()
+    groups = ("crawl_round_1", "crawl_round_3")
+    before = {g: set(tracker.getJobIdsForGroup(g)) for g in groups}
+    root = str(tmp_path_factory.mktemp("gate"))
+    eng = CrawlEngine(spark, root, EngineConfig(max_rounds=6, **cfg))
+    check(eng.run(seeds), range(6))
+    n_jobs = [len(set(tracker.getJobIdsForGroup(g)) - before[g]) for g in groups]
+    assert n_jobs[0] == n_jobs[1] > 0, n_jobs
+    for r in range(-1, 6):
+        has_filter = "seen_filter" in eng.store.snapshot_at(r)["tables"]
+        assert has_filter == (r >= crossing), f"round {r}"
+
+    # kill before the crossing; the resumed run builds the filter itself
+    root = str(tmp_path_factory.mktemp("gate_resume"))
+    killed = CrawlEngine(spark, root, EngineConfig(max_rounds=crossing, **cfg))
+    check(killed.run(seeds), range(crossing))
+    resumed = CrawlEngine(spark, root, EngineConfig(max_rounds=6, **cfg)).run()
+    check(resumed, range(crossing, 6))
+    assert resumed[0].get("bloom_rebuilt") is True
 
 
 def test_hot_host_salting_golden(spark, tmp_path_factory):

@@ -359,10 +359,8 @@ def test_c4_concurrent_chunk_extraction(spark):
     a 100 ms/model-call endpoint and ~23 chunks per doc, concurrency=8 must
     (a) produce byte-equal merged output to the sequential wire path, (b)
     hit the endpoint exactly once per chunk, (c) actually overlap — the
-    server-observed max in-flight ≥ 4 and wall well under the sequential
-    bound."""
-    import time
-
+    server-observed max in-flight ≥ 4 (load-independent, unlike a
+    wall-clock bound)."""
     from deepcrawl4ai_spark.multimodal.media import (
         extract_structured,
         make_http_extractor,
@@ -379,47 +377,42 @@ def test_c4_concurrent_chunk_extraction(spark):
         n_chunks = seq[0]["n_chunks"]
         assert n_chunks >= 16
         before = srv.n_extracts
-        t0 = time.time()
         conc = extract_structured(
             docs, fields, extractor=make_http_extractor(srv.base), concurrency=8
         ).collect()
-        wall = time.time() - t0
         assert srv.n_extracts - before == n_chunks  # exactly once per chunk
         assert srv.extract_max_active >= 4, srv.extract_max_active
     assert conc[0]["extracted"] == seq[0]["extracted"]  # byte-equal merge
     assert conc[0]["n_chunks"] == n_chunks
-    # sequential lower bound is n_chunks × 0.1 s; 8-way overlap cuts it ~8×
-    assert wall < n_chunks * 0.1 * 0.55, f"{wall:.2f}s for {n_chunks} chunks"
 
 
 def test_robots_fill_fanout(spark):
     """VERDICT r4 #3: the robots-cache fill fans out through the same
     bounded pool as the page fetch. 48 hosts through ONE partition against
-    a 50 ms origin: width 10 must be ≥3× faster than sequential and produce
-    byte-identical dim rows."""
-    import time
-
+    a 50 ms origin: the server-observed robots in-flight peak is 1 at width
+    1 and ≥ 4 at width 10 (load-independent, unlike a wall-clock ratio),
+    with byte-identical dim rows."""
     from deepcrawl4ai_spark.frontier import fetcher as FE
 
     hosts = WG.hosts()[:48]
     hdf = spark.createDataFrame([(h,) for h in hosts], "host string").repartition(1)
 
-    def run(conc):
+    def run(srv, conc):
         FE.pool_reset()
-        t0 = time.time()
-        rows = sorted(
+        t = {"kind": "http", "base": srv.base, "concurrency": conc}
+        return sorted(
             (r.asDict(recursive=True) for r in FE.fetch_robots_df(hdf, t).collect()),
             key=lambda r: r["host"],
         )
-        return rows, time.time() - t0
 
     with SyntheticWebServer(robots_delay_s=0.05) as srv:
-        t = {"kind": "http", "base": srv.base, "concurrency": 1}
-        rows_seq, wall_seq = run(1)
-        t = {"kind": "http", "base": srv.base, "concurrency": 10}
-        rows_fan, wall_fan = run(10)
+        rows_seq = run(srv, 1)
+        peak_seq = srv.robots_max_active
+        rows_fan = run(srv, 10)
+        peak_fan = srv.robots_max_active
     assert rows_fan == rows_seq and len(rows_fan) == len(hosts)
-    assert wall_seq / wall_fan >= 3.0, f"{wall_seq:.2f}s vs {wall_fan:.2f}s"
+    assert peak_seq == 1, peak_seq
+    assert peak_fan >= 4, peak_fan
     FE.pool_reset()
 
 
